@@ -40,12 +40,16 @@ object TextAnalysis {
     * `size(filter(ws, w -> array_contains(<list>, w)))`, whose lambda
     * is CodegenFallback and ran INTERPRETED once per corpus row in
     * every quality/langid/curation scorer. Same count (per
-    * occurrence, binary string equality); the list is sorted ascending
-    * at build time (the kernel's contract — ASCII word lists sort
-    * identically under String and UTF8String orderings). */
-  private[operators] def wordHits(ws: org.apache.spark.sql.Column,
-      list: Seq[String]): org.apache.spark.sql.Column =
-    graft.functions.SortedHitCount(ws, array(list.sorted.map(lit): _*))
+    * occurrence, binary string equality); the list is sorted at build
+    * time in UTF-8 byte order, the order the kernel binary-searches
+    * under (Java's UTF-16 `String` order differs once a word leaves
+    * the BMP). */
+  private[graft] def wordHits(ws: org.apache.spark.sql.Column,
+      list: Seq[String]): org.apache.spark.sql.Column = {
+    val utf8 = list.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    graft.functions.SortedHitCount(ws,
+      array(utf8.sortWith(_.compareTo(_) < 0).map(w => lit(w.toString)): _*))
+  }
 
   /** Non-empty token count — `size(filter(ws, x -> x != ''))` without
     * the interpreted lambda: total size minus the ''-occurrence count

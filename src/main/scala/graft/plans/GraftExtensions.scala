@@ -13,6 +13,9 @@ import graft.functions.{ArgminTop2Long, CharCounts, CosineSim, DiversityStats, D
   * registers graft's native expressions as SQL functions so plain
   * `spark.sql("SELECT graft_cosine(a, b) ...")` uses the codegen
   * kernel — no UDF registration per session, works on every executor.
+  * It also injects graft's plan rules: [[SelfDistanceElimination]]
+  * (optimizer), [[TopKPerGroupStrategy]] (planner) and
+  * [[SmallSortSinglePartition]] (AQE stage preparation).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -200,5 +203,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ))
     ext.injectOptimizerRule(_ => SelfDistanceElimination)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
   }
 }

@@ -406,12 +406,12 @@ object EventStream {
   }
 
   /** File-source stream over a testdata dir. Streaming sources need the
-    * schema declared up front, so probe the file's decoded layout with a
-    * batch footer read (LongType ts = legacy ns file, TimestampType =
+    * schema declared up front, so probe the file's decoded layout through
+    * the table schema cache (LongType ts = legacy ns file, TimestampType =
     * current µs file) and declare the matching schema. */
   def readEventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+    val schema = graft.sources.Tables.schemaOf(s, s"$dir/events.parquet")("ts").dataType match {
       case LongType => rawSchema
       case _        => usSchema
     }

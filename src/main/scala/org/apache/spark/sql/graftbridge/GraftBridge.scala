@@ -29,10 +29,12 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Drain the listener bus — `LiveListenerBus.waitUntilEmpty` is
-    * `private[spark]`; Bench needs it so a per-query task-time counter
-    * (fed by an async SparkListener) is read only after every task-end
-    * event for the just-finished query has been delivered. */
+  /** Drain the listener bus, waiting at most 30 s —
+    * `LiveListenerBus.waitUntilEmpty` is `private[spark]`. Listener
+    * events (task ends, job starts, QueryExecutionListener callbacks)
+    * are delivered asynchronously, so a reader of listener-accumulated
+    * state drains first to see every event of the action that just
+    * finished. */
   def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+    spark.sparkContext.listenerBus.waitUntilEmpty(30000)
 }

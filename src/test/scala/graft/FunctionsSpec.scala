@@ -634,6 +634,17 @@ class FunctionsSpec extends SparkSpec {
     assert(both.exists(_.getLong(1) > 0L), "fixture never hits — test is vacuous")
   }
 
+  test("wordHits sorts its word list in UTF-8 byte order, the order the kernel searches") {
+    // "Ａ" (U+FF21) sorts after "😀" (U+1F600) in Java's UTF-16 String
+    // order but before it in UTF-8 byte order; a list sorted the Java
+    // way hides "Ａ" from the binary search
+    import spark.implicits._
+    val docs = Seq(Seq("Ａ", "😀", "the", "x", "Ａ")).toDF("ws")
+    val hits = docs.select(graft.operators.TextAnalysis.wordHits(col("ws"),
+      Seq("Ａ", "😀", "the"))).head().getLong(0)
+    assert(hits == 4L)
+  }
+
   test("graft_minhash_fold and graft_sorted_hit_count registered via extensions") {
     val out = spark.sql(
       """SELECT graft_minhash_fold(array('a b c')) = graft_minhash16('a b c') AS same_sig,

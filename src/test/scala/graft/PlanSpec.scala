@@ -1,5 +1,16 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, collect_list, explode}
+import org.apache.spark.sql.graftbridge.GraftBridge
+
+import graft.sources.Tables
+
 /** Plan-shape assertions — the 100 TB design contract (SURVEY §5):
   * filters/projections reach the scan, dim joins broadcast, top-k
   * never globally sorts. */
@@ -724,5 +735,85 @@ class PlanSpec extends SparkSpec {
       s"global-window set drifted — new entries need a boundedness argument:\n" +
         s"  got      ${withGlobalWindow.mkString(", ")}\n" +
         s"  declared ${declared.mkString(", ")}")
+  }
+
+  /** Partition counts of the range exchanges in `df`'s final adaptive
+    * plan (call after an action). */
+  private def rangeParts(df: DataFrame): Seq[Int] = {
+    def walk(p: SparkPlan): Seq[Int] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeExec =>
+        (e.outputPartitioning match {
+          case RangePartitioning(_, n) => Seq(n)
+          case _ => Nil
+        }) ++ walk(e.child)
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Spark jobs started by `body`, counted through a listener on a job
+    * group of their own. */
+  private def jobsOf(body: => Unit): Int = {
+    spark.streams.active.foreach(_.stop())
+    GraftBridge.drainListenerBus(spark)
+    val group = s"plan-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try { body; GraftBridge.drainListenerBus(spark) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    jobs.get()
+  }
+
+  private def shufflePartitions: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  test("q01's small presentation sort range-partitions into one partition") {
+    val df = SparkEntry.queries("q01_agg")(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    assert("""rangepartitioning\(.*, 1\)""".r.findFirstIn(p).isDefined, p)
+    assert(rangeParts(df) == Seq(1), p)
+  }
+
+  test("q01 runs 3 jobs: no schema-inference job, no range-sample job") {
+    // scan + partial aggregate, the one-partition range shuffle, the
+    // result; the first load of lineitem in this JVM infers its schema
+    Tables.lineitem(spark, sf)
+    assert(jobsOf(SparkEntry.queries("q01_agg")(spark, sf).collect()) == 3)
+  }
+
+  test("above the advisory size the sort keeps its partitions, with identical rows") {
+    val q01 = SparkEntry.queries("q01_agg")
+    val expected = q01(spark, sf).collect().toSeq
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1")
+    try {
+      val df = q01(spark, sf)
+      val rows = df.collect().toSeq
+      assert(rangeParts(df) == Seq(shufflePartitions))
+      assert(rows == expected)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a sort above an explode or a join over a stage is not rewritten") {
+    def agg = spark.range(200).groupBy((col("id") % 10).as("k"))
+      .agg(collect_list("id").as("ids"))
+    val control = agg.orderBy("k")
+    val exploded = agg.select(col("k"), explode(col("ids")).as("v")).orderBy("v")
+    val joined = agg.join(spark.range(200).groupBy((col("id") % 10).as("k")).count(), "k")
+      .orderBy("k")
+    Seq(control, exploded, joined).foreach(_.collect())
+    assert(rangeParts(control) == Seq(1), "control sort not rewritten: the negatives are vacuous")
+    assert(rangeParts(exploded) == Seq(shufflePartitions))
+    assert(rangeParts(joined) == Seq(shufflePartitions))
   }
 }

@@ -95,7 +95,7 @@ object ScanCount {
     // deliver to the new listener and be counted into THIS query (the
     // full-suite-order "+1 documents" flake — the previous query's one
     // scan arriving late)
-    org.apache.spark.GraftTestBus.flush(s.sparkContext)
+    org.apache.spark.sql.graftbridge.GraftBridge.drainListenerBus(s)
     val seenCaches = scala.collection.mutable.Set[Int]()
     val acc = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -107,7 +107,7 @@ object ScanCount {
     sessions.foreach(_.listenerManager.register(listener))
     try {
       SparkEntry.queries(name)(s, sf).collect()
-      org.apache.spark.GraftTestBus.flush(s.sparkContext)
+      org.apache.spark.sql.graftbridge.GraftBridge.drainListenerBus(s)
     } finally sessions.foreach(_.listenerManager.unregister(listener))
     acc.synchronized(acc.toMap)
   }
